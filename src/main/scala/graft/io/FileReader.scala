@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import java.util.zip.ZipFile
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import scala.collection.mutable.ArrayBuffer
@@ -117,11 +118,9 @@ object FileReader {
       .csv(path)
     // Ragged rows: pandas pads short rows with NaN -> str "nan"? The
     // reference files are rectangular; we normalize missing tail cells to ""
-    // to keep the all-string contract.
-    val filled = df.columns.foldLeft(df)((d, c) =>
-      d.withColumn(c, org.apache.spark.sql.functions.coalesce(
-        org.apache.spark.sql.functions.col(c), org.apache.spark.sql.functions.lit(""))))
-    filled
+    // to keep the all-string contract. One select, so the plan is analysed
+    // once rather than once per column.
+    df.select(df.columns.map(c => coalesce(col(c), lit("")).as(c)): _*)
   }
 
   /** S1 CSV scan with encoding cascade. */
@@ -281,7 +280,7 @@ object FileReader {
   /** Scratch files created by the distributed XLSX path. A scratch file
     * must outlive every re-evaluation of the DataFrame built over it, so
     * deletion is the CALLER's lifecycle decision: the ingest pipeline
-    * releases after its eager localCheckpoint materializes the grid
+    * releases once its data job has written the store
     * (deleteOnExit remains the backstop for ad-hoc readers). Ingests run
     * one file at a time (the reference's upload flow), so releaseScratch
     * deleting every tracked file is safe. */
@@ -290,7 +289,7 @@ object FileReader {
 
   /** Delete every tracked XLSX scratch file — call only once no DataFrame
     * returned by [[parseFile]]/[[readXlsx]] will be evaluated again (e.g.
-    * after the ingest's checkpoint + store landing). Without this, each
+    * after the ingest's store write). Without this, each
     * 100 MB ceiling ingest parks ~1 GB of decompressed XML on disk until
     * JVM exit. */
   def releaseScratch(): Unit = {

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.config.{Catalog, SourceConfig}
@@ -9,17 +9,25 @@ import graft.io.FileReader
 import graft.store.VersionStore
 
 import scala.collection.immutable.ListMap
+import scala.util.control.NonFatal
 
 /** The end-to-end ingest orchestration — the Spark re-expression of the
   * reference's `POST /upload/{source}/ingest` flow (upload.py:419-561 →
   * ingestor.py:691-783 → 504-648) and its `validate` dry-run twin
   * (upload.py:196-416).
   *
-  * One distributed plan per file: all-string scan → driver-side header
-  * detection on 15 collected rows → projection → typed transform →
-  * validity split → window dedup → versioned write. The quarantine split
-  * replaces the reference's write-then-retry-per-row fallback: identical
-  * observable outcome (partial success + per-row error strings), one pass.
+  * An ingest runs the reference's order: header detection on the first 15
+  * rows (one small job), a `processing` version row, then ONE data job
+  * that parses, projects, transforms, validates, dedups and writes the
+  * file, then the version's completion. Validation and dedup share one
+  * window (see [[Ingestor.rankDuplicates]]), and the inserted, duplicate
+  * and invalid counts plus the first `maxCollectedErrors` error strings are
+  * observed on that plan above the window — in the write's result stage, so
+  * a retried task is counted once. No intermediate is cached, counted or
+  * collected. The quarantine split replaces the reference's
+  * write-then-retry-per-row fallback: identical observable outcome (partial
+  * success + per-row error strings), one pass. Metadata transitions run no
+  * Spark job (see [[VersionStore]]).
   */
 object IngestPipeline {
 
@@ -40,14 +48,11 @@ object IngestPipeline {
         c.internalName -> HeaderDetector.ColumnMapping(c.acceptedHeaders, c.isRequired)
     }: _*)
 
-  /** Parse + detect + project + transform + split. Shared by ingest and
-    * validate. Returns (typedValid, quarantine, detection) — both returned
-    * frames share the `typed` parent, which is PERSISTED so the ingest's
-    * several actions (insert count, invalid count, dup count, data write)
-    * each start from the cached typed rows instead of re-parsing the file.
-    * Callers release it via the also-returned handle. */
+  /** Parse + detect + project + transform, lazily: the only job here is
+    * header detection's bounded fetch of the first rows. Returns the typed
+    * rows (with `_row_number`) and the detection. */
   private def prepare(spark: SparkSession, source: SourceConfig, path: String):
-      (DataFrame, DataFrame, HeaderDetector.Detection, DataFrame) = {
+      (DataFrame, HeaderDetector.Detection) = {
     val (raw, _) = FileReader.parseFile(spark, path)
     val head = FileReader.firstRows(raw, HeaderDetector.MaxScanRows)
     val det = HeaderDetector.detectHeaderRow(head, mappingsOf(source))
@@ -58,25 +63,39 @@ object IngestPipeline {
     val numbered = FileReader.withRowNumbers(raw)
     val dataRows = numbered.filter(col("_row_number") > hdrIdx + 1)
     val nonEmpty = Ingestor.filterEmptyRows(dataRows, colIdx.values.map(i => s"_c$i").toSeq)
-    // localCheckpoint (not just persist): the typed lineage is hundreds of
-    // parse/when expressions per column, and every downstream action (insert
-    // count, invalid count, error collect, data write) would re-ANALYZE that
-    // whole tree on the driver — at this point planning time, not execution
-    // time, dominates an ingest. Truncating the lineage makes each follow-up
-    // plan trivial. Fault-tolerance note: an ingest input is ≤100 MB by
-    // contract (the validate-time size cap), so losing a cached partition
-    // and restarting the ingest is cheaper than keeping the lineage.
-    val typed = Ingestor.transformColumns(Ingestor.project(nonEmpty, colIdx), source)
-      .localCheckpoint()
-    val (valid, quarantine) = Ingestor.validateSplit(typed, source.uniqueKeys)
-    (valid, quarantine, det, typed)
+    (Ingestor.transformColumns(Ingestor.project(nonEmpty, colIdx), source), det)
+  }
+
+  /** What the data job observed while writing one file. */
+  private final case class Landed(inserted: Long, duplicates: Long, invalid: Long,
+                                  errors: Seq[String])
+
+  /** The data job: writes the first-wins rows of `typed` into the version's
+    * partition and returns the counts and first errors observed on the way. */
+  private def land(store: VersionStore, source: SourceConfig, typed: DataFrame,
+                   versionId: Long, append: Boolean): Landed = {
+    val obs = Observation()
+    val rank = col("_dup_rank")
+    val ranked = Ingestor.rankDuplicates(typed, source.uniqueKeys).observe(obs,
+      count(when(rank === 1, lit(1))).as("inserted"),
+      count(when(rank > 1, lit(1))).as("duplicates"),
+      count(when(rank.isNull, lit(1))).as("invalid"),
+      Ingestor.firstErrors(col("_row_number"), Ingestor.missingKeyError(source.uniqueKeys),
+        Catalog.Limits.maxCollectedErrors).as("errors"))
+    store.writeData(source.targetTable, versionId,
+      ranked.filter(rank === 1).drop("_dup_rank", "_row_number"), append)
+    val m = obs.get
+    Landed(m("inserted").asInstanceOf[Long], m("duplicates").asInstanceOf[Long],
+      m("invalid").asInstanceOf[Long], m("errors").asInstanceOf[scala.collection.Seq[String]].toSeq)
   }
 
   /** Full ingest with the reference's partial-success semantics:
     * `completed` iff any rows landed (ingestor.py:624, 747-768); all-fail →
-    * `failed` with a first-5 error summary (770-774). NCCI_PTP multi-part:
-    * if a completed version already exists for (source, label, variant) the
-    * file appends under the SAME version id (691-783). */
+    * `failed` with a first-5 error summary (770-774), and an exception in
+    * the data job → `failed` with its message, then rethrown. A failed new
+    * version keeps no data directory. NCCI_PTP multi-part: if a completed
+    * version already exists for (source, label, variant) the file appends
+    * under the SAME version id (691-783). */
   def ingestFile(spark: SparkSession, store: VersionStore, sourceCode: String,
                  path: String, versionLabel: String,
                  effectiveDate: java.sql.Date, variant: Option[String] = None,
@@ -94,62 +113,48 @@ object IngestPipeline {
         .select("data_version_id", "part_count").collect().headOption
     else None
 
-    val (valid, quarantine, det, typed) = prepare(spark, source, path)
-    val (unique, _) = Ingestor.dedupFirstWins(valid, source.uniqueKeys)
-    val toWrite = unique.drop("_row_number").persist()
-    val inserted = toWrite.count()
-    // Valid + invalid in one job over the checkpointed typed rows.
-    // Duplicates = valid minus survivors (dedup keeps null-key rows, so the
-    // difference is exactly the rank>1 rows) — a count over the cached typed
-    // rows instead of a second run of the dedup window.
-    val (validCount, invalidCount) = Ingestor.validCounts(typed, source.uniqueKeys)
-    val dupCount = validCount - inserted
-    // Error strings come to the driver CAPPED at maxCollectedErrors (the
-    // exact invalid count is still computed distributed) — an adversarial
-    // all-invalid file must not become a driver-OOM vector.
-    val invalidRows = quarantine.select("_error", "_row_number")
-      .orderBy("_row_number")
-      .limit(Catalog.Limits.maxCollectedErrors)
-      .collect().map(_.getString(0)).toSeq
+    val (typed, det) = prepare(spark, source, path)
+    def result(versionId: Long, status: String, l: Landed) =
+      IngestResult(versionId, status, l.inserted + l.invalid + l.duplicates,
+        l.inserted, l.invalid, l.duplicates, l.errors,
+        det.headerRowIndex.get, det.unmappedColumns)
 
-    val result = existing match {
+    existing match {
       case Some(row) => // U4 append path
         val versionId = row.getLong(0)
-        store.writeData(source.targetTable, versionId, toWrite, append = true)
-        store.appendPart(versionId, row.getInt(1) + 1, fileHash, fileName, inserted)
-        store.log(versionId, "INFO", s"Appended part ${row.getInt(1) + 1} ($inserted rows)")
-        IngestResult(versionId, "completed", inserted + invalidCount + dupCount,
-          inserted, invalidCount, dupCount, invalidRows,
-          det.headerRowIndex.get, det.unmappedColumns)
+        val part = row.getInt(1) + 1
+        val l = land(store, source, typed, versionId, append = true)
+        store.appendPart(versionId, part, fileHash, fileName, l.inserted)
+        store.log(versionId, "INFO", s"Appended part $part (${l.inserted} rows)")
+        result(versionId, "completed", l)
       case None =>
         val versionId = store.createVersion(source.sourceCode, versionLabel,
           effectiveDate, variant, fileHash, fileName)
-        if (inserted > 0) {
-          store.writeData(source.targetTable, versionId, toWrite)
-          store.completeVersion(versionId, inserted,
+        val l = try land(store, source, typed, versionId, append = false) catch {
+          case NonFatal(e) =>
+            store.deleteData(source.targetTable, versionId)
+            store.failVersion(versionId, Option(e.getMessage).getOrElse(e.toString))
+            throw e
+        }
+        if (l.inserted > 0) {
+          store.completeVersion(versionId, l.inserted,
             markCurrentFor = if (markAsCurrent) Some((source.sourceCode, variant)) else None)
-          if (invalidCount > 0)
+          if (l.invalid > 0)
             store.log(versionId, "WARNING",
-              s"$invalidCount rows failed validation",
-              Some(invalidRows.take(5).mkString("[\"", "\",\"", "\"]")))
-          IngestResult(versionId, "completed", inserted + invalidCount + dupCount,
-            inserted, invalidCount, dupCount, invalidRows,
-            det.headerRowIndex.get, det.unmappedColumns)
+              s"${l.invalid} rows failed validation",
+              Some(l.errors.take(5).mkString("[\"", "\",\"", "\"]")))
+          result(versionId, "completed", l)
         } else {
-          val summary = invalidRows.take(5).mkString("; ")
-          store.failVersion(versionId, s"No rows inserted. First errors: $summary")
-          IngestResult(versionId, "failed", invalidCount + dupCount, 0,
-            invalidCount, dupCount, invalidRows,
-            det.headerRowIndex.get, det.unmappedColumns)
+          store.deleteData(source.targetTable, versionId)
+          store.failVersion(versionId,
+            s"No rows inserted. First errors: ${l.errors.take(5).mkString("; ")}")
+          result(versionId, "failed", l)
         }
     }
-    toWrite.unpersist()
-    typed.unpersist()
-    result
   } finally {
-    // The eager localCheckpoint in prepare() materialized the grid, so no
-    // frame re-reads the upload — any XLSX scratch XML can go now instead
-    // of parking ~10× the upload size on disk until JVM exit.
+    // The write has read the upload for the last time, so any XLSX scratch
+    // XML can go now instead of parking ~10× the upload size on disk until
+    // JVM exit.
     FileReader.releaseScratch()
   }
 

@@ -1,13 +1,15 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 
 import graft.config.{Catalog, LogicalType, SourceConfig}
 import graft.transform.Transformers
 
 import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 
 /** The ingest pipeline core, re-expressed as declarative DataFrame stages.
   *
@@ -73,33 +75,82 @@ object Ingestor {
     df.select(exprs ++ carried: _*)
   }
 
-  /** P5/S8 key validation + quarantine split: rows with any NULL unique-key
-    * column are routed to a quarantine DataFrame carrying the reference's
-    * exact error string for the FIRST missing key in key order
+  /** True when every unique-key column is non-null. */
+  private def allKeysPresent(uniqueKeys: Seq[String]): Column =
+    uniqueKeys.map(col(_).isNotNull).reduce(_ && _)
+
+  /** The reference's quarantine message for a row with a NULL unique key,
+    * naming the FIRST missing key in key order
     * ("Row N: Missing required key column 'k'", reference: ingestor.py:358-375).
-    * Returns (valid, quarantine-with-_error). One pass, no write-then-retry:
-    * validate-before-write replaces the reference's per-row INSERT fallback. */
+    * NULL when every key is present. */
+  def missingKeyError(uniqueKeys: Seq[String], rowNumberCol: String = "_row_number"): Column =
+    concat(lit("Row "), col(rowNumberCol).cast("string"),
+      lit(": Missing required key column '"),
+      coalesce(uniqueKeys.map(k => when(col(k).isNull, lit(k))): _*), lit("'"))
+
   /** Valid/invalid row counts in ONE action (the split frames would cost a
     * job each; an ingest is fixed-overhead-bound at KB scale). */
   def validCounts(df: DataFrame, uniqueKeys: Seq[String]): (Long, Long) = {
-    val allPresent = uniqueKeys.map(col(_).isNotNull).reduce(_ && _)
+    val allPresent = allKeysPresent(uniqueKeys)
     val r = df.select(
       count(when(allPresent, lit(1))).as("v"),
       count(when(!allPresent, lit(1))).as("q")).head()
     (r.getLong(0), r.getLong(1))
   }
 
+  /** P5/S8 key validation + quarantine split: rows with any NULL unique-key
+    * column are routed to a quarantine DataFrame carrying
+    * [[missingKeyError]] as `_error`. Returns (valid, quarantine-with-_error).
+    * One pass, no write-then-retry: validate-before-write replaces the
+    * reference's per-row INSERT fallback. */
   def validateSplit(df: DataFrame, uniqueKeys: Seq[String],
                     rowNumberCol: String = "_row_number"): (DataFrame, DataFrame) = {
-    val allPresent = uniqueKeys.map(col(_).isNotNull).reduce(_ && _)
-    val firstMissing = coalesce(
-      uniqueKeys.map(k => when(col(k).isNull, lit(k))): _*)
+    val allPresent = allKeysPresent(uniqueKeys)
     val valid = df.filter(allPresent)
-    val quarantine = df.filter(!allPresent).withColumn("_error",
-      concat(lit("Row "), col(rowNumberCol).cast("string"),
-        lit(": Missing required key column '"), firstMissing, lit("'")))
+    val quarantine = df.filter(!allPresent)
+      .withColumn("_error", missingKeyError(uniqueKeys, rowNumberCol))
     (valid, quarantine)
   }
+
+  /** Validation and D1 dedup as ONE window over every row: `_dup_rank` is
+    * the row's first-wins rank among the rows sharing its unique key
+    * (1 = kept, >1 = duplicate) and NULL for a row missing a key (invalid).
+    * Invalid rows add their row number to the window key, so an upload full
+    * of null keys spreads across partitions instead of piling into one. */
+  def rankDuplicates(df: DataFrame, uniqueKeys: Seq[String],
+                     orderCol: String = "_row_number"): DataFrame = {
+    val allPresent = allKeysPresent(uniqueKeys)
+    val w = Window.partitionBy(uniqueKeys.map(col) :+ when(!allPresent, col(orderCol)): _*)
+      .orderBy(col(orderCol))
+    df.withColumn("_dup_rank", when(allPresent, row_number().over(w)))
+  }
+
+  /** The first `cap` error strings by row number — a bounded aggregate, so
+    * an all-invalid upload ships at most `cap` strings per task to the
+    * driver. NULL errors (valid rows) are skipped. */
+  private final class FirstErrors(cap: Int)
+      extends Aggregator[(Long, String), java.util.TreeMap[java.lang.Long, String], Seq[String]] {
+    private type Buf = java.util.TreeMap[java.lang.Long, String]
+    private def add(b: Buf, row: java.lang.Long, error: String): Buf = {
+      b.put(row, error)
+      if (b.size > cap) b.pollLastEntry()
+      b
+    }
+    def zero: Buf = new java.util.TreeMap[java.lang.Long, String]()
+    def reduce(b: Buf, in: (Long, String)): Buf =
+      if (in._2 == null) b else add(b, in._1, in._2)
+    def merge(b1: Buf, b2: Buf): Buf = {
+      b2.forEach((k, v) => add(b1, k, v): Unit)
+      b1
+    }
+    def finish(b: Buf): Seq[String] = b.values.asScala.toSeq
+    def bufferEncoder: Encoder[Buf] = Encoders.kryo[Buf]
+    def outputEncoder: Encoder[Seq[String]] = ExpressionEncoder[Seq[String]]()
+  }
+
+  /** [[FirstErrors]] as a Column over (row number, error string). */
+  def firstErrors(rowNumber: Column, error: Column, cap: Int): Column =
+    udaf(new FirstErrors(cap), Encoders.tuple(Encoders.scalaLong, Encoders.STRING))(rowNumber, error)
 
   /** D1 in-file dedup, first-occurrence-wins, null-key rows exempt
     * (reference: ingestor.py:468-496). Window formulation: shuffle by the

@@ -3,8 +3,14 @@ package graft.store
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.config.Catalog
 
@@ -19,9 +25,16 @@ import graft.config.Catalog
   * app/services/ingestor.py:101-259 (lifecycle), 691-783 (multi-part append),
   * scripts/init_db.py:418-518 (current views).
   *
-  * Atomicity (U3): metadata updates are write-new-then-rename swaps of the
-  * versions table — the same observable contract as the reference's DB
-  * transaction, under a single-writer discipline.
+  * Metadata is written as driver-local parquet: the rows are KB-scale and
+  * already on the driver, so each file goes through Spark's own parquet
+  * writer (session codec, Spark-readable) from the driver — no job, no
+  * task, no commit protocol. A metadata transition launches no Spark job.
+  *
+  * Atomicity (U3): updates to the versions and parts tables are
+  * write-new-then-rename swaps of the whole table directory — the same
+  * observable contract as the reference's DB transaction, under a
+  * single-writer discipline. A log row is written under a hidden name and
+  * renamed in, so readers never see a partial file.
   */
 final class VersionStore(val spark: SparkSession, val root: String) {
   import VersionStore._
@@ -38,21 +51,19 @@ final class VersionStore(val spark: SparkSession, val root: String) {
   // The versions/parts metadata tables are KB-scale and this store is
   // single-writer (class contract above), so they are cached as driver-local
   // rows and served as LocalRelations: a metadata read costs no file-scan
-  // job, and a swap costs one local collect plus the one durable parquet
-  // write. The parquet under `meta/` stays the source of truth on disk —
+  // job, and a swap costs one local collect plus one driver-written parquet
+  // file. The parquet under `meta/` stays the source of truth on disk —
   // a fresh VersionStore instance on the same root reloads it.
-  private var versionsCache: Option[Seq[org.apache.spark.sql.Row]] = None
-  private var partsCache: Option[Seq[org.apache.spark.sql.Row]] = None
+  private var versionsCache: Option[Seq[Row]] = None
+  private var partsCache: Option[Seq[Row]] = None
 
-  private def localDF(rows: Seq[org.apache.spark.sql.Row],
-                      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val list = new java.util.ArrayList[org.apache.spark.sql.Row](rows.size)
+  private def localDF(rows: Seq[Row], schema: StructType): DataFrame = {
+    val list = new java.util.ArrayList[Row](rows.size)
     rows.foreach(list.add)
     spark.createDataFrame(list, schema)
   }
 
-  private def loadMeta(cache: Option[Seq[org.apache.spark.sql.Row]], path: String):
-      Seq[org.apache.spark.sql.Row] =
+  private def loadMeta(cache: Option[Seq[Row]], path: String): Seq[Row] =
     cache.getOrElse {
       if (exists(path)) spark.read.parquet(path).collect().toSeq
       else Seq.empty
@@ -60,7 +71,7 @@ final class VersionStore(val spark: SparkSession, val root: String) {
 
   /** Cached versions rows for driver-side metadata reads. Positional field
     * access only — rows constructed here are schemaless GenericRows. */
-  private def versionRows: Seq[org.apache.spark.sql.Row] = {
+  private def versionRows: Seq[Row] = {
     val rows = loadMeta(versionsCache, versionsPath)
     versionsCache = Some(rows)
     rows
@@ -69,43 +80,61 @@ final class VersionStore(val spark: SparkSession, val root: String) {
   /** Versions metadata DF (empty-shaped if none yet). */
   def versions: DataFrame = localDF(versionRows, versionSchema)
 
-  def parts: DataFrame = {
+  private def partRows: Seq[Row] = {
     val rows = loadMeta(partsCache, partsPath)
     partsCache = Some(rows)
-    localDF(rows, partSchema)
+    rows
   }
+
+  def parts: DataFrame = localDF(partRows, partSchema)
 
   def logs: DataFrame =
     if (exists(logsPath)) spark.read.parquet(logsPath)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], logSchema)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], logSchema)
 
-  /** Atomic swap: write to a temp dir, then rename over the live one. The
-    * new state is collected once (tiny, local), cached for subsequent
-    * metadata reads, and written durably from the collected rows. */
+  /** Write `rows` as one parquet file in `dir` from the driver, through the
+    * same ParquetFileFormat writer a Spark write uses. The file is written
+    * under a hidden name (readers skip `.`-prefixed files) and renamed in;
+    * the Hadoop rename carries the local filesystem's `.crc` along. Columns
+    * are written nullable, as a Spark write would. */
+  private def writeLocalParquet(rows: Seq[Row], schema: StructType, dir: String): Unit = {
+    val fileSchema = StructType(schema.map(_.copy(nullable = true)))
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, fileSchema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val name = s"part-00000-${java.util.UUID.randomUUID()}${factory.getFileExtension(ctx)}"
+    val hidden = new Path(dir, s".$name")
+    val writer = factory.newInstance(hidden.toString, fileSchema, ctx)
+    val toInternal = ExpressionEncoder(fileSchema, true).createSerializer()
+    try rows.foreach(r => writer.write(toInternal(r))) finally writer.close()
+    val fs = hidden.getFileSystem(job.getConfiguration)
+    if (!fs.rename(hidden, new Path(dir, name)))
+      throw new java.io.IOException(s"could not rename $hidden into $dir")
+  }
+
+  /** Atomic swap: write the new state to a temp dir, then rename it over
+    * the live one. The rows are cached for subsequent metadata reads. */
   private def swapWrite(df: DataFrame, path: String): Unit =
     swapWriteRows(df.collect().toSeq, df.schema, path)
 
-  private def swapWriteRows(rows: Seq[org.apache.spark.sql.Row],
-                            schema: org.apache.spark.sql.types.StructType,
-                            path: String): Unit = {
+  private def swapWriteRows(rows: Seq[Row], schema: StructType, path: String): Unit = {
     if (path == versionsPath) versionsCache = Some(rows)
     else if (path == partsPath) partsCache = Some(rows)
-    val tmp = path + ".tmp"
-    localDF(rows, schema).coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
+    val tmp = Paths.get(path + ".tmp")
+    deleteRecursively(tmp)
+    writeLocalParquet(rows, schema, tmp.toString)
     val live = Paths.get(path)
     val old = Paths.get(path + ".old")
     if (Files.exists(live)) {
       deleteRecursively(old)
       Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
     }
-    Files.move(Paths.get(tmp), live, StandardCopyOption.ATOMIC_MOVE)
+    Files.move(tmp, live, StandardCopyOption.ATOMIC_MOVE)
     deleteRecursively(old)
   }
 
   /** U2 create a version in 'processing' state; returns its id. The new row
-    * is built driver-side from the cached metadata (no read job) and the
-    * swap pays only the one durable write. */
+    * is built driver-side from the cached metadata. */
   def createVersion(sourceCode: String, versionLabel: String,
                     effectiveDate: java.sql.Date, variant: Option[String],
                     fileHash: String, fileName: String): Long = {
@@ -113,7 +142,7 @@ final class VersionStore(val spark: SparkSession, val root: String) {
     val nextId =
       if (cur.isEmpty) 1L else cur.map(_.getLong(0)).max + 1L
     val now = new java.sql.Timestamp(System.currentTimeMillis())
-    val row = org.apache.spark.sql.Row(
+    val row = Row(
       nextId, sourceCode, versionLabel, effectiveDate, variant.orNull,
       "processing", fileHash, fileName, null, false, now, 1, null)
     swapWriteRows(cur :+ row, versionSchema, versionsPath)
@@ -174,11 +203,13 @@ final class VersionStore(val spark: SparkSession, val root: String) {
       .parquet(s"$dataDir/$table/data_version_id=$versionId")
   }
 
+  /** Remove a version's data partition, if any. */
+  def deleteData(table: String, versionId: Long): Unit =
+    deleteRecursively(Paths.get(s"$dataDir/$table/data_version_id=$versionId"))
+
   /** Part already committed to the ledger? (The exactly-once probe.) */
   def hasPart(versionId: Long, partNumber: Int): Boolean =
-    parts.filter(org.apache.spark.sql.functions.col("data_version_id") === versionId &&
-        org.apache.spark.sql.functions.col("part_number") === partNumber)
-      .limit(1).count() > 0
+    partRows.exists(r => r.getLong(0) == versionId && r.getInt(1) == partNumber)
 
   /** Land one part EXACTLY ONCE even under crash/replay: skip if the part
     * is on the ledger, otherwise [[stagePart]] (idempotent data move) then
@@ -305,7 +336,7 @@ final class VersionStore(val spark: SparkSession, val root: String) {
 
   /** U5 cascade delete: version data files + metadata rows. */
   def deleteVersion(id: Long, table: String): Unit = {
-    deleteRecursively(Paths.get(s"$dataDir/$table/data_version_id=$id"))
+    deleteData(table, id)
     swapWrite(versions.filter(col("data_version_id") =!= id), versionsPath)
     if (exists(partsPath))
       swapWrite(parts.filter(col("data_version_id") =!= id), partsPath)
@@ -315,10 +346,8 @@ final class VersionStore(val spark: SparkSession, val root: String) {
     * (record_count += n, part_count += 1 — reference ingestor.py:153-195). */
   def appendPart(versionId: Long, partNumber: Int, fileHash: String,
                  fileName: String, recordCount: Long): Unit = {
-    val row = spark.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row(
-        versionId, partNumber, fileHash, fileName, recordCount)), partSchema)
-    swapWrite(parts.unionByName(row), partsPath)
+    swapWriteRows(partRows :+ Row(versionId, partNumber, fileHash, fileName, recordCount),
+      partSchema, partsPath)
     updateVersion(versionId, v => v
       .withColumn("record_count", when(col("data_version_id") === versionId,
         coalesce(col("record_count"), lit(0L)) + recordCount).otherwise(col("record_count")))
@@ -326,13 +355,11 @@ final class VersionStore(val spark: SparkSession, val root: String) {
         coalesce(col("part_count"), lit(1)) + 1).otherwise(col("part_count"))))
   }
 
-  /** U6 ingestion event log append. */
+  /** U6 ingestion event log append: one driver-written file per entry. */
   def log(versionId: Long, level: String, message: String, detailsJson: Option[String] = None): Unit = {
     val now = new java.sql.Timestamp(System.currentTimeMillis())
-    val row = spark.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row(versionId, level, message,
-        detailsJson.orNull, now)), logSchema)
-    row.write.mode(SaveMode.Append).parquet(logsPath)
+    writeLocalParquet(Seq(Row(versionId, level, message, detailsJson.orNull, now)),
+      logSchema, logsPath)
   }
 
   /** D2 duplicate-file detection: any completed version of this source with

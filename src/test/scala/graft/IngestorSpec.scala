@@ -54,6 +54,14 @@ class IngestorSpec extends SparkSpecBase {
     assert(dups.count() == 1)
   }
 
+  test("first errors: the capped first rows by row number, merged across partitions") {
+    import spark.implicits._
+    val df = (1L to 1000L).map(i => (i, if (i % 3 == 0) s"e$i" else null)).toDF("n", "err")
+      .repartition(8)
+    val got = df.agg(Ingestor.firstErrors(col("n"), col("err"), 5)).head.getSeq[String](0)
+    assert(got == Seq("e3", "e6", "e9", "e12", "e15"))
+  }
+
   // ---- P2 empty-row filter (ingestor.py:291-303)
   test("empty-row filter drops rows at >= 80% empty cells") {
     import spark.implicits._

@@ -85,10 +85,44 @@ class VersionStoreSpec extends SparkSpecBase {
     store.writeData("cms.pfs_opps_cap", id, sampleData(1))
     store.completeVersion(id, 2, markCurrentFor = Some(("PFS_OPPS_CAP", None)))
     // a NEW instance must reload the durable parquet, not see empty caches
+    store.appendPart(id, 2, "hash2", "f2.csv", 3)
+    store.log(id, "INFO", "Appended part 2 (3 rows)")
+    store.log(id, "WARNING", "1 rows failed validation", Some("[\"Row 2: x\"]"))
     val reopened = new VersionStore(spark, store.root)
     assert(reopened.currentView("cms.pfs_opps_cap", "PFS_OPPS_CAP").count() == 2)
     assert(reopened.isDuplicateFile("PFS_OPPS_CAP", "hash1"))
     assert(reopened.versions.filter(col("is_current")).count() == 1)
+    val v = reopened.versions.head
+    assert(v.getAs[Long]("record_count") == 5 && v.getAs[Int]("part_count") == 2)
+    assert(reopened.parts.collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2),
+      r.getString(3), r.getLong(4))).toSeq == Seq((id, 2, "hash2", "f2.csv", 3L)))
+    assert(reopened.logs.orderBy("logged_at", "level").select("data_version_id", "level", "message", "details")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3))).toSeq ==
+      Seq((id, "INFO", "Appended part 2 (3 rows)", null),
+        (id, "WARNING", "1 rows failed validation", "[\"Row 2: x\"]")))
+  }
+
+  test("log appends leave only readable part files, no temp or orphaned checksum files") {
+    val store = newStore()
+    (1 to 4).foreach(i => store.log(7L, "INFO", s"entry $i"))
+    val names = new java.io.File(store.logsPath).listFiles.map(_.getName).toSeq
+    val parts = names.filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(parts.size == 4)
+    // the local filesystem's checksums, one per part file and nothing else
+    assert(names.toSet == parts.toSet ++ parts.map(n => s".$n.crc"), names)
+    assert(spark.read.parquet(store.logsPath).count() == 4)
+  }
+
+  test("metadata tables read back with the store's schemas") {
+    val store = newStore()
+    val id = store.createVersion("NCCI_PTP", "2026-Q1",
+      java.sql.Date.valueOf("2026-01-01"), Some("HOSPITAL"), "h", "f.csv")
+    store.appendPart(id, 2, "h2", "f2.csv", 1)
+    store.log(id, "INFO", "x")
+    def shape(s: org.apache.spark.sql.types.StructType) = s.map(f => f.name -> f.dataType)
+    for ((path, schema) <- Seq(store.versionsPath -> VersionStore.versionSchema,
+        store.partsPath -> VersionStore.partSchema, store.logsPath -> VersionStore.logSchema))
+      assert(shape(spark.read.parquet(path).schema) == shape(schema), path)
   }
 
   test("JDBC sink writes version rows in 1000-row insert batches (S7)") {
